@@ -3,6 +3,9 @@
 
 Usage: python3 scripts/check.py <verify_out_dir> <sf_dir> [query ...]
 
+Exits 0 only when at least one query was compared and none failed. A
+requested query name that has no entry in oracle_sql.json is a failure.
+
 Reads each <out>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from <out>/oracle_sql.json in DuckDB over the fixture
 parquet tables, and compares BOTH the arrow-level result types and the
@@ -107,7 +110,10 @@ def main():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = n_skip = 0
+    n_pass = n_fail = 0
+    for name in sorted(only - set(oracle)):
+        print(f"FAIL {name}: not in oracle_sql.json")
+        n_fail += 1
     for name in sorted(oracle):
         if only and name not in only:
             continue
@@ -154,8 +160,8 @@ def main():
         else:
             print(f"PASS {name}: {len(g)} rows x {len(g.columns)} cols")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail, {n_skip} skip ==")
-    sys.exit(1 if n_fail else 0)
+    print(f"== {n_pass} pass, {n_fail} fail ==")
+    sys.exit(1 if n_fail or not n_pass else 0)
 
 
 if __name__ == "__main__":

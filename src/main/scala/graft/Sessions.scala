@@ -153,7 +153,14 @@ object Sessions {
     * plan time, so anything materialized inside runs at the narrow
     * width. Mutates the session's SQLConf, so callers running queries
     * CONCURRENTLY on one session should instead plan the narrow work on
-    * `spark.newSession()` (isolated conf, shared catalog/state). */
+    * `spark.newSession()` (isolated conf, shared catalog/state).
+    *
+    * Stateful streaming ops instantiate one state store (with its own
+    * checkpoint delta files) PER shuffle partition PER micro-batch — a
+    * low-rate stream at the batch-tuned width pays 32 state commits per
+    * trigger for a handful of rows. That width is frozen into the
+    * checkpoint at first start, so it must be set before the query
+    * begins; size it to state volume, not CPU count. */
   def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)

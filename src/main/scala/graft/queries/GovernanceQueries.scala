@@ -311,7 +311,7 @@ object GovernanceQueries {
           java.nio.file.Paths.get(s"$dir/documents.parquet"))
         val outDir = graft.Tmp.dir("graft-q97-out").toString
         val src = spark.readStream.schema(docsSchema).parquet(streamDir.toString)
-        graft.streaming.Streams.withShufflePartitions(spark, 4) {
+        graft.Sessions.withShufflePartitions(spark, 4) {
           val q = src.writeStream.trigger(Trigger.AvailableNow())
             .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
               Dedup.contamination(

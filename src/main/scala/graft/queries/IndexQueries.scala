@@ -467,37 +467,23 @@ object IndexQueries {
       val idxPath = s"$root/codes"
       graft.Meta.Versioned.write(
         Similarity.ivfEncode(hist, "vec_id", "embedding", stale), idxPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() in the measured path. The fold is per-row encode +
-      // union (no per-batch output), so the final index is independent
-      // of batch MEMBERSHIP — the old sorted-half split is replaced by
-      // the residue split vec_id ≡ 0 / ≡ 3 (mod 6) over the same set.
+      // The fold is per-row encode + union (no per-batch output), so
+      // the final index is independent of batch MEMBERSHIP — the old
+      // sorted-half split is replaced by the residue split
+      // vec_id ≡ 0 / ≡ 3 (mod 6) over the same set.
       val feedDf = e.filter(col("vec_id") % 3 === 0)
         .select(col("vec_id"), col("embedding"))
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
       // Segment-append fold (round 21): code rows are append-only (each
       // vec_id arrives once) — writeOnce the batch's encode only and
       // resolve the standing index with readAll, instead of re-writing
       // the full code table every micro-batch. Same txn markers.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      graft.streaming.Streams.foldFeed(root,
+          Seq(feedDf.filter(col("vec_id") % 6 === 0),
+            feedDf.filter(col("vec_id") % 6 === 3))) { (batch, bid) =>
         graft.Meta.Versioned.writeOnce(
           Similarity.ivfEncode(
             batch.toDF("vec_id", "embedding"), "vec_id", "embedding", stale),
           idxPath, "q226", bid)
-        ()
-      }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("vec_id") % 6 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("vec_id") % 6 === 3))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       graft.Meta.Versioned.readAll(spark, idxPath)
         .select(col("vec_id"), col("cid"))
@@ -1096,21 +1082,20 @@ object IndexQueries {
               org.apache.spark.sql.types.DoubleType),
             org.apache.spark.sql.types.StructField("breach",
               org.apache.spark.sql.types.BooleanType)))), resPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the embedding payload. The oracle pins batch
-      // membership to the sorted-half split (rn ≤ n div 2 over
-      // vec_id), reproduced here via the exact ⌊n∕2⌋-th-smallest
-      // vec_id cutoff — the cutoff probe is harness-side batch
-      // STAGING (a top-k scan + one scalar to the driver), not part
-      // of the monitored fold; a real connector defines its own
-      // batch boundaries.
+      // The oracle pins batch membership to the sorted-half split
+      // (rn ≤ n div 2 over vec_id), reproduced here via the exact
+      // ⌊n∕2⌋-th-smallest vec_id cutoff — the cutoff probe is harness-
+      // side batch STAGING (a top-k scan + one scalar to the driver),
+      // not part of the monitored fold; a real connector defines its
+      // own batch boundaries.
       val feedDf = e.filter(col("vec_id") % 5 === 0)
         .select(col("vec_id"), col("embedding"))
       // vec_id is the embeddings PK — distinctness (which the value-
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
       val cutoff = graft.streaming.Streams.halfCutoffByKey(feedDf, "vec_id")
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      graft.streaming.Streams.foldFeed(root,
+          Seq(feedDf.filter(col("vec_id") <= cutoff),
+            feedDf.filter(col("vec_id") > cutoff))) { (batch, bid) =>
         val row = scores(batch.toDF("vec_id", "embedding"))
           .crossJoin(broadcast(thr))
           .agg(count(lit(1)).as("n"),
@@ -1125,20 +1110,6 @@ object IndexQueries {
         // segment-append fold (round 21): one result row per batch is
         // append-only — writeOnce the delta, resolve with readAll
         graft.Meta.Versioned.writeOnce(row, resPath, "q232", bid)
-        ()
-      }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("vec_id") <= cutoff))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("vec_id") > cutoff))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       graft.Meta.Versioned.readAll(spark, resPath)
     },
@@ -1697,14 +1668,12 @@ object IndexQueries {
         IndexLog.initial(
           Similarity.ivfEncode(hist, "vec_id", "embedding", cb), "vec_id"),
         idxPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the embedding payload. Batch membership of the
-      // adds halves is irrelevant to the post-compact snapshot (each
-      // add id appears once; upserts/tombstones arrive in strictly
-      // later batches and IndexLog keeps the highest version), so the
-      // old sorted-half split becomes the residue split ≡ 0 ∕ ≡ 3
-      // (mod 6); upd rides batch 1 with the second adds half and dels
-      // are batch 2, exactly as before.
+      // Batch membership of the adds halves is irrelevant to the
+      // post-compact snapshot (each add id appears once; upserts/
+      // tombstones arrive in strictly later batches and IndexLog keeps
+      // the highest version), so the old sorted-half split becomes the
+      // residue split ≡ 0 ∕ ≡ 3 (mod 6); upd rides batch 1 with the
+      // second adds half and dels are batch 2, exactly as before.
       val adds = e.filter(col("vec_id") % 3 === 0)
         .select(col("vec_id"), col("embedding"), lit("u").as("op"))
       val upd = e.filter(col("vec_id") % 9 === 1 && col("vec_id") % 7 =!= 1)
@@ -1712,8 +1681,10 @@ object IndexQueries {
           lit("u").as("op"))
       val dels = e.filter(col("vec_id") % 7 === 1)
         .select(col("vec_id"), col("embedding"), lit("d").as("op"))
-      val feed = new graft.streaming.Streams.FileFeed(spark, adds.schema, root)
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      graft.streaming.Streams.foldFeed(root, Seq(
+          adds.filter(col("vec_id") % 6 === 0),
+          adds.filter(col("vec_id") % 6 === 3).unionByName(upd),
+          dels)) { (batch, bid) =>
         val b = batch.toDF("vec_id", "embedding", "op")
         val ups = IndexLog.upserts(
           Similarity.ivfEncode(b.filter(col("op") === "u")
@@ -1728,22 +1699,6 @@ object IndexQueries {
         // whole log every batch. Same txn markers.
         graft.Meta.Versioned.writeOnce(
           ups.unionByName(tmb), idxPath, "q241", bid)
-        ()
-      }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(adds.filter(col("vec_id") % 6 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(adds.filter(col("vec_id") % 6 === 3).unionByName(upd))
-          q.processAllAvailable()
-          feed.add(dels)
-          q.processAllAvailable()
-        } finally q.stop()
       }
       // the compaction pass: squash the segment log (the union of every
       // retained version), publish as the next version; the post-compact
@@ -2054,39 +2009,20 @@ object IndexQueries {
       val statePath = s"$root/moments"
       graft.Meta.Versioned.write(
         moments(e.filter(col("vec_id") % 2 === 1)), statePath)
-      // file-backed feed (Streams.FileFeed, round 16): batches staged
-      // as parquet executor-side and re-entering through the file-
-      // stream source — no driver collect() in the measured path (the
-      // MemoryStream feed collected ~250 MB onto the driver at sf10;
-      // A/B in bench/README.md "Round-16: the file-backed feed A/B").
-      // Batch membership is unchanged: batch 0 = vec_id ≡ 0 (mod 4),
-      // batch 1 = the remaining evens.
+      // batch 0 = vec_id ≡ 0 (mod 4), batch 1 = the remaining evens
       val feedDf = e.select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 2 === 0)
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
       // Segment-append fold (round 21, guide §2.3/§6): the moment state
       // is additive (per-pos long counts + exact DECIMAL power sums, both
       // order-free), so each batch writeOnces only its OWN aggregate and
       // the standing state is re-reduced from the retained segments at
       // read time — O(|batch agg|) written per trigger instead of
       // re-writing the full dims+pairs grid. Same txn markers.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      graft.streaming.Streams.foldFeed(root,
+          Seq(feedDf.filter(col("vec_id") % 4 === 0),
+            feedDf.filter(col("vec_id") % 4 =!= 0))) { (batch, bid) =>
         graft.Meta.Versioned.writeOnce(
           moments(batch.toDF("vec_id", "embedding")), statePath, "q248", bid)
-        ()
-      }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("vec_id") % 4 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("vec_id") % 4 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       // resolve the segment log: the same reduce the old fold ran per
       // batch, once — long and exact-decimal sums are order-free

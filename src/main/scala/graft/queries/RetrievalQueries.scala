@@ -388,7 +388,9 @@ object RetrievalQueries {
         postings(toks(feedDf)).limit(0), postPath)
       Versioned.write(
         ngramCounts(toks(feedDf), 3).limit(0), cntPath)
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      val batches = Seq(feedDf.filter(col("doc_id") % 2 === 0),
+        feedDf.filter(col("doc_id") % 2 =!= 0))
+      def fold(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit = {
         // one tokenize+posexplode of the batch shared by both folds
         // (the postings append and the trigram-count delta each built
         // their own before); released after the two commits.
@@ -403,28 +405,10 @@ object RetrievalQueries {
         Versioned.writeOnce(bp, postPath, "q286post", bid)
         Versioned.writeOnce(ngramCountsFrom(bp, 3), cntPath, "q286cnt", bid)
         bp.unpersist()
-        ()
-      }
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
-      @volatile var lastBid = -1L
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("doc_id") % 2 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-            if (bid > lastBid) lastBid = bid
-            fold(b, bid)
-          }
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("doc_id") % 2 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       // deliberate at-least-once replay of the final batch — must no-op
-      fold(feedDf.filter(col("doc_id") % 2 =!= 0), lastBid)
+      fold(batches.last,
+        graft.streaming.Streams.foldFeed(root, batches)(fold))
       // resolve the segment logs: counts re-aggregate (long sums —
       // order-free), postings union as-is
       val qterms = workloadTerms(

@@ -29,41 +29,6 @@ object StatefulQueries {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** File-backed two-batch CDC feed + at-least-once replay (round 16;
-    * shared by q103/q124/q133): stages the change feed in two
-    * key-parity batches through [[graft.streaming.Streams.FileFeed]]
-    * (no driver collect — the old MemoryStream path materialized the
-    * whole diff on the driver), runs `fold` per micro-batch, then
-    * RE-APPLIES the final batch under its original batch id — the
-    * caller's writeOnce txn markers must make the doubled fold a
-    * no-op, which the oracle match downstream pins. The first feed
-    * column is the parity key. */
-  private def cdcTwoBatchWithReplay(root: String,
-      feedDf: org.apache.spark.sql.DataFrame,
-      fold: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit = {
-    val spark = feedDf.sparkSession
-    val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
-    val key = col(feedDf.columns.head)
-    @volatile var lastBid = -1L
-    graft.streaming.Streams.withShufflePartitions(spark, 4) {
-      feed.add(feedDf.filter(key % 2 === 0))
-      val q = feed.stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-          if (bid > lastBid) lastBid = bid
-          fold(batch, bid)
-        }
-        .outputMode("update")
-        .option("checkpointLocation", s"$root/cp")
-        .start()
-      try {
-        q.processAllAvailable()
-        feed.add(feedDf.filter(key % 2 =!= 0))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    fold(feedDf.filter(key % 2 =!= 0), lastBid)
-  }
-
   val all: Seq[Q] = Seq(
 
     // ---- Stateful streaming aggregation: event-time daily windows over
@@ -95,8 +60,8 @@ object StatefulQueries {
           sum(col("value").cast(DecimalType(12, 2))).cast("double").as("total_value"))
       val name = "graft_q31_" + java.util.UUID.randomUUID.toString.replace("-", "")
       // state width sized to the window-key volume (~few hundred groups),
-      // not the batch CPU count — see Streams.withShufflePartitions
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
+      // not the batch CPU count — see Sessions.withShufflePartitions
+      graft.Sessions.withShufflePartitions(spark, 4) {
         val q = agg.writeStream.format("memory").queryName(name)
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
@@ -181,37 +146,19 @@ object StatefulQueries {
       }) { (spark, dir) =>
       import graft.streaming.Streams
       val root = graft.Tmp.dir("graft-q37")
-      val (target, cp) = (s"$root/scd2", s"$root/cp")
+      val target = s"$root/scd2"
       val c = Tables.customer(spark, dir)
       Merge.asScd2(c, "2024-01-01 00:00:00").write.parquet(target)
-
-      // file-backed feed (Streams.FileFeed, round 16): the CDC batches
-      // are minted as column arithmetic over the customer scan and
-      // staged executor-side — the old path collected every row to the
-      // driver to rebuild it as tuples.
+      // the CDC batches are column arithmetic over the customer scan
       def batchOf(delta: Double, ts: String) = c
         .filter(col("c_custkey") % 3 === 0)
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
           (col("c_acctbal") + delta).as("c_acctbal"), col("c_mktsegment"),
           lit(ts).cast("timestamp_ntz").as("updated_at"))
-      val feed = new Streams.FileFeed(
-        spark, batchOf(0.0, "2024-01-01 00:00:00").schema, root.toString)
-      // the per-batch SCD2 merge joins a few thousand rows — 4 shuffle
-      // partitions, not the batch-tuned 32 (see withShufflePartitions)
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(batchOf(10.0, "2024-02-01 00:00:00"))
-        val q = feed.stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            Streams.scd2Upsert(batch, target, "c_custkey", Seq("c_acctbal"))
-          }
-          .outputMode("update")
-          .option("checkpointLocation", cp)
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(batchOf(20.0, "2024-03-01 00:00:00"))
-          q.processAllAvailable()
-        } finally q.stop()
+      Streams.foldFeed(root.toString, Seq(
+          batchOf(10.0, "2024-02-01 00:00:00"),
+          batchOf(20.0, "2024-03-01 00:00:00"))) { (batch, _) =>
+        Streams.scd2Upsert(batch, target, "c_custkey", Seq("c_acctbal"))
       }
       spark.read.parquet(target)
     },
@@ -293,7 +240,7 @@ object StatefulQueries {
         .select(col("event_id"), col("user_id"),
           col("ts").cast("timestamp_ntz").as("ts"), col("value"), col("flag_value"))
       val name = "graft_q45_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
+      graft.Sessions.withShufflePartitions(spark, 4) {
         val q = joined.writeStream.format("memory").queryName(name)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
@@ -321,7 +268,7 @@ object StatefulQueries {
         .dropDuplicates("user_id", "event_type")
         .select("user_id", "event_type")
       val name = "graft_q46_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
+      graft.Sessions.withShufflePartitions(spark, 4) {
         val q = src.writeStream.format("memory").queryName(name)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
@@ -354,7 +301,7 @@ object StatefulQueries {
         .join(dim, col("user_id") === col("c_custkey"))
         .select("c_mktsegment", "value")
       val name = "graft_q59_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
+      graft.Sessions.withShufflePartitions(spark, 4) {
         val q = joined.writeStream.format("memory").queryName(name)
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
@@ -401,7 +348,7 @@ object StatefulQueries {
         .groupBy(col("user_id"), session_window(col("ts"), "24 hours").as("w"))
         .agg(count(lit(1)).as("n_events"))
       val name = "graft_q61_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
+      graft.Sessions.withShufflePartitions(spark, 4) {
         val q = agg.writeStream.format("memory").queryName(name)
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
@@ -522,18 +469,20 @@ object StatefulQueries {
         Incremental.aggSumCount(v1, Seq("o_custkey"), "o_totalprice"), aggPath)
       // two deterministic key-parity batches (update pre/post images of
       // one key may land in DIFFERENT batches; the abelian fold absorbs
-      // it) + at-least-once replay, via the shared file-backed driver
+      // it) + at-least-once replay of the last one under its batch id
       val feedDf = graft.Meta.Versioned
         .snapshotDiff(v1, v2, Seq("o_orderkey"), preimages = true)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"), col("change_type"))
-      cdcTwoBatchWithReplay(root, feedDf, (batch, bid) => {
+      val batches = Seq(feedDf.filter(col("o_orderkey") % 2 === 0),
+        feedDf.filter(col("o_orderkey") % 2 =!= 0))
+      def fold(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit = {
         val standing = graft.Meta.Versioned.read(spark, aggPath)
         graft.Meta.Versioned.writeOnce(
           Incremental.maintainSumCount(standing, batch,
             Seq("o_custkey"), "o_totalprice"), aggPath, "q103", bid)
-        ()
-      })
+      }
+      fold(batches.last, Streams.foldFeed(root, batches)(fold))
       graft.Meta.Versioned.read(spark, aggPath)
         .select(col("o_custkey"), col("cnt"), col("total").cast("double"))
     },
@@ -577,34 +526,17 @@ object StatefulQueries {
           .agg(call_function("graft_kmv_sketch", col("h"), lit(1024)).as("sk"))
       // seed: an empty standing table (schema only) as snapshot v1
       graft.Meta.Versioned.write(sketchOf(docs.limit(0)), skPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the corpus text; batch membership unchanged
-      // (key parity, with the first half replayed verbatim as its own
-      // batch — KMV merge is idempotent set union, so the doubled
-      // batch must be absorbed)
-      val feed = new Streams.FileFeed(spark, docs.schema, root)
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(docs.filter(col("doc_id") % 2 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val standing = graft.Meta.Versioned.read(spark, skPath)
-            val merged = standing.unionByName(sketchOf(batch))
-              .groupBy("source")
-              .agg(call_function("graft_kmv_merge", col("sk")).as("sk"))
-            graft.Meta.Versioned.write(merged, skPath)
-            ()
-          }
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          // at-least-once: the SAME half staged again — idempotent fold
-          feed.add(docs.filter(col("doc_id") % 2 === 0))
-          q.processAllAvailable()
-          feed.add(docs.filter(col("doc_id") % 2 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
+      // key-parity batches, with the first half staged twice
+      // (at-least-once: KMV merge is idempotent set union, so the
+      // doubled batch must be absorbed)
+      val even = docs.filter(col("doc_id") % 2 === 0)
+      val odd = docs.filter(col("doc_id") % 2 =!= 0)
+      Streams.foldFeed(root, Seq(even, even, odd)) { (batch, _) =>
+        val standing = graft.Meta.Versioned.read(spark, skPath)
+        val merged = standing.unionByName(sketchOf(batch))
+          .groupBy("source")
+          .agg(call_function("graft_kmv_merge", col("sk")).as("sk"))
+        graft.Meta.Versioned.write(merged, skPath)
       }
       val streamed = graft.Meta.Versioned.read(spark, skPath)
         .select(col("source"),
@@ -677,13 +609,14 @@ object StatefulQueries {
         .snapshotDiff(v1, v2, Seq("o_orderkey"), preimages = true)
         .select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"), col("change_type"))
-      cdcTwoBatchWithReplay(root, feedDf, (batch, bid) => {
+      val batches = Seq(feedDf.filter(col("o_orderkey") % 2 === 0),
+        feedDf.filter(col("o_orderkey") % 2 =!= 0))
+      def fold(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit =
         graft.Meta.Versioned.writeOnce(
           Incremental.maintainMoments(
             graft.Meta.Versioned.read(spark, aggPath), batch,
             Seq("o_custkey"), "o_totalprice"), aggPath, "q124", bid)
-        ()
-      })
+      fold(batches.last, Streams.foldFeed(root, batches)(fold))
       val m = graft.Meta.Versioned.read(spark, aggPath)
       val s1c = col("s1") * 100
       val s2c4 = col("s2") * 10000
@@ -729,13 +662,14 @@ object StatefulQueries {
         .snapshotDiff(v1, v2, Seq("doc_id"), preimages = true)
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_chars"), col("change_type"))
-      cdcTwoBatchWithReplay(root, feedDf, (batch, bid) => {
+      val batches = Seq(feedDf.filter(col("doc_id") % 2 === 0),
+        feedDf.filter(col("doc_id") % 2 =!= 0))
+      def fold(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit =
         graft.Meta.Versioned.writeOnce(
           Incremental.maintainSumCount(
             graft.Meta.Versioned.read(spark, aggPath), batch,
             Seq("lang", "source"), "n_chars"), aggPath, "q133", bid)
-        ()
-      })
+      fold(batches.last, Streams.foldFeed(root, batches)(fold))
       val maintained = graft.Meta.Versioned.read(spark, aggPath)
         .select(col("lang"), col("source"), col("cnt").as("n_v2"),
           col("total").cast("long").as("chars_v2"))
@@ -803,21 +737,19 @@ object StatefulQueries {
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("novelty",
               org.apache.spark.sql.types.DoubleType)))), resPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the document text. Batch membership MATTERS here
-      // (novelty scores read the standing owner state as of the doc's
-      // batch), so the oracle's sorted-half split is reproduced
-      // exactly via the ⌊n∕2⌋-th-smallest doc_id cutoff — a harness-
-      // side staging probe, not part of the measured fold.
+      // Batch membership MATTERS here (novelty scores read the standing
+      // owner state as of the doc's batch), so the oracle's sorted-half
+      // split is reproduced exactly via the ⌊n∕2⌋-th-smallest doc_id
+      // cutoff — a harness-side staging probe, not part of the measured
+      // fold.
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"))
       // doc_id is the documents PK — distinctness (which the value-
       // cutoff ⇔ rank-split equivalence needs) is asserted inside
       val cutoff = Streams.halfCutoffByKey(feedDf, "doc_id")
-      val feed = new Streams.FileFeed(spark, feedDf.schema, root)
-      @volatile var lastBid = -1L
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        if (bid > lastBid) lastBid = bid
+      val batches = Seq(feedDf.filter(col("doc_id") <= cutoff),
+        feedDf.filter(col("doc_id") > cutoff))
+      def fold(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit = {
         // Replay guard (round 21, §5): the fold materializes two
         // localCheckpoints before writeOnce can consult the txn markers,
         // so the in-query redelivery paid a full shingle+fold pass for
@@ -858,25 +790,10 @@ object StatefulQueries {
             ownPath, "q165own", bid)
           graft.Meta.Versioned.writeOnce(scored, resPath, "q165res", bid)
         }
-        ()
-      }
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("doc_id") <= cutoff))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("doc_id") > cutoff))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       // at-least-once replay of the final batch: writeOnce must make the
       // double-applied fold a no-op on both tables
-      fold(feedDf.filter(col("doc_id") > cutoff).toDF("doc_id", "text"),
-        lastBid)
+      fold(batches.last, Streams.foldFeed(root, batches)(fold))
       graft.Meta.Versioned.readAll(spark, resPath)
     },
 
@@ -926,8 +843,8 @@ object StatefulQueries {
               org.apache.spark.sql.types.LongType)))), resPath)
       // doc_id is the documents PK — distinctness asserted inside
       val cutoff = Streams.halfCutoffByKey(docs, "doc_id")
-      val feed = new Streams.FileFeed(spark, docs.schema, root)
-      @volatile var lastBid = -1L
+      val batches = Seq(docs.filter(col("doc_id") <= cutoff),
+        docs.filter(col("doc_id") > cutoff))
       // Segment-append fold (round 21, guide §2.3/§6 — write the DELTA,
       // not the snapshot): ownership rows and rewrite rows are append-
       // only, so each fold writeOnces only its batch's new rows and the
@@ -938,8 +855,7 @@ object StatefulQueries {
       // ownership table (at 100 TB, the difference between a micro-batch
       // and a corpus rewrite per trigger). Same txn markers, same
       // replay-no-op contract.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        if (bid > lastBid) lastBid = bid
+      def fold(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit = {
         // Replay guard (round 21, §5 — skip compute the txn log proves
         // redundant): exactSubstrBatch materializes its kernels eagerly
         // (caches + localCheckpoints), so a redelivered batch used to pay
@@ -958,25 +874,10 @@ object StatefulQueries {
           graft.Meta.Versioned.writeOnce(newOwners, ownPath, "q280own", bid)
           graft.Meta.Versioned.writeOnce(rewritten, resPath, "q280res", bid)
         }
-        ()
-      }
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(docs.filter(col("doc_id") <= cutoff))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(docs.filter(col("doc_id") > cutoff))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       // at-least-once replay of the final batch: algebraic no-op + txn
       // markers, both pinned by the oracle match downstream
-      fold(docs.filter(col("doc_id") > cutoff).toDF("doc_id", "text"),
-        lastBid)
+      fold(batches.last, Streams.foldFeed(root, batches)(fold))
       graft.Meta.Versioned.readAll(spark, resPath)
     },
 
@@ -1016,36 +917,20 @@ object StatefulQueries {
           .select(explode(col("c")).as("term"))
       graft.Meta.Versioned.write(cmOf(docs.limit(0)), cmPath)
       graft.Meta.Versioned.write(candsOf(docs.limit(0)), candPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect(); key-parity batch membership unchanged
-      val feed = new Streams.FileFeed(spark, docs.schema, root)
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(docs.filter(col("doc_id") % 2 === 0))
-        val q = feed.stream.writeStream
-          // CM merge is elementwise ADDITION — a replayed batch would
-          // double its counts — so both folds commit through writeOnce
-          // (txn markers, round 8). The two tables are separate commit
-          // points: a crash between them replays the batch, the cm fold
-          // no-ops on its marker, and only the missing cands fold runs.
-          // Segment-append folds (round 21): CM merge is associative
-          // elementwise addition and the candidate set is a distinct
-          // union — both resolve order-free from per-batch segments, so
-          // each batch writeOnces only its OWN sketch / candidate rows
-          // and the standing read+rewrite per trigger disappears.
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            graft.Meta.Versioned.writeOnce(cmOf(batch), cmPath, "q121", bid)
-            graft.Meta.Versioned.writeOnce(
-              candsOf(batch), candPath, "q121", bid)
-            ()
-          }
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(docs.filter(col("doc_id") % 2 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
+      // CM merge is elementwise ADDITION — a replayed batch would
+      // double its counts — so both folds commit through writeOnce
+      // (txn markers, round 8). The two tables are separate commit
+      // points: a crash between them replays the batch, the cm fold
+      // no-ops on its marker, and only the missing cands fold runs.
+      // Segment-append folds (round 21): CM merge is associative
+      // elementwise addition and the candidate set is a distinct
+      // union — both resolve order-free from per-batch segments, so
+      // each batch writeOnces only its OWN sketch / candidate rows
+      // and the standing read+rewrite per trigger disappears.
+      Streams.foldFeed(root, Seq(docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0))) { (batch, bid) =>
+        graft.Meta.Versioned.writeOnce(cmOf(batch), cmPath, "q121", bid)
+        graft.Meta.Versioned.writeOnce(candsOf(batch), candPath, "q121", bid)
       }
       // resolve the segment logs: one CM merge over all per-batch
       // sketches (== the old per-batch fold chain, by associativity),
@@ -1097,32 +982,16 @@ object StatefulQueries {
         df.groupBy("event_type")
           .agg(call_function("graft_bitmap_sketch", col("user_id")).as("bm"))
       graft.Meta.Versioned.write(bitmapOf(ev.limit(0)), bmPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the events slice; key-parity membership unchanged,
-      // with the first half staged TWICE (at-least-once — OR absorbs it)
-      val feed = new Streams.FileFeed(spark, ev.schema, root)
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(ev.filter(col("event_id") % 2 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-            val standing = graft.Meta.Versioned.read(spark, bmPath)
-            val merged = standing.unionByName(bitmapOf(batch))
-              .groupBy("event_type")
-              .agg(call_function("graft_bitmap_merge", col("bm")).as("bm"))
-            graft.Meta.Versioned.write(merged, bmPath)
-            ()
-          }
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          // at-least-once: the SAME batch redelivered — OR absorbs it
-          feed.add(ev.filter(col("event_id") % 2 === 0))
-          q.processAllAvailable()
-          feed.add(ev.filter(col("event_id") % 2 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
+      // key-parity batches, with the first half staged TWICE
+      // (at-least-once: the SAME batch redelivered — OR absorbs it)
+      val even = ev.filter(col("event_id") % 2 === 0)
+      val odd = ev.filter(col("event_id") % 2 =!= 0)
+      Streams.foldFeed(root, Seq(even, even, odd)) { (batch, _) =>
+        val standing = graft.Meta.Versioned.read(spark, bmPath)
+        val merged = standing.unionByName(bitmapOf(batch))
+          .groupBy("event_type")
+          .agg(call_function("graft_bitmap_merge", col("bm")).as("bm"))
+        graft.Meta.Versioned.write(merged, bmPath)
       }
       val streamed = graft.Meta.Versioned.read(spark, bmPath)
         .select(col("event_type"), col("bm").as("bm_stream"))
@@ -1165,7 +1034,7 @@ object StatefulQueries {
       val feed = new Streams.FileFeed(spark, ev.schema, root)
       val src = feed.stream.as[StateV2.EventIn]
       StateV2.withRocksDbState(spark) {
-        Streams.withShufflePartitions(spark, 4) {
+        graft.Sessions.withShufflePartitions(spark, 4) {
           val q = StateV2.runningUserStats(src)
             .writeStream
             .foreachBatch {
@@ -1257,29 +1126,11 @@ object StatefulQueries {
           standing.unionByName(partials(batch, bid)), manPath)
       }
       graft.Meta.Versioned.write(partials(ev.limit(0), -1L), manPath)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect(); key-parity batch membership unchanged
-      val feed = new Streams.FileFeed(spark, ev.schema, root)
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(ev.filter(col("event_id") % 2 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-            commit(batch, bid)
-          }
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(ev.filter(col("event_id") % 2 =!= 0))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val batches = Seq(ev.filter(col("event_id") % 2 === 0),
+        ev.filter(col("event_id") % 2 =!= 0))
       // crash-replay the LAST commit manually: same batch, same bid —
       // the commit-overwrite shield must absorb it byte for byte
-      val lastBid = graft.Meta.Versioned.read(spark, manPath)
-        .agg(max("_bid")).head().getLong(0)
-      commit(ev.filter(col("event_id") % 2 =!= 0), lastBid)
+      commit(batches.last, Streams.foldFeed(root, batches)(commit))
       val folded = graft.Meta.Versioned.read(spark, manPath)
         .groupBy("part", "seg").agg(sum("bytes").as("bytes"))
       val direct = ev.groupBy(col("event_type").as("part"),
@@ -1329,34 +1180,20 @@ object StatefulQueries {
       graft.Meta.Versioned.write(
         Sample.priorityTopK(docs.filter(col("doc_id") % 3 =!= 0),
           "doc_id", "n_chars", n), path)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect(). The top-(n+1) priority fold is an associative
-      // merge (top-of-tops == top-of-all), so batch MEMBERSHIP is
-      // irrelevant to the final sample — the old sorted-half split
-      // becomes the residue split doc_id ≡ 0 ∕ ≡ 3 (mod 6).
+      // The top-(n+1) priority fold is an associative merge
+      // (top-of-tops == top-of-all), so batch MEMBERSHIP is irrelevant
+      // to the final sample — the old sorted-half split becomes the
+      // residue split doc_id ≡ 0 ∕ ≡ 3 (mod 6).
       val feedDf = docs.filter(col("doc_id") % 3 === 0)
-      val feed = new graft.streaming.Streams.FileFeed(spark, feedDf.schema, root)
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      graft.streaming.Streams.foldFeed(root,
+          Seq(feedDf.filter(col("doc_id") % 6 === 0),
+            feedDf.filter(col("doc_id") % 6 === 3))) { (batch, bid) =>
         val bt = Sample.priorityTopK(batch.toDF("doc_id", "n_chars"),
           "doc_id", "n_chars", n)
         val merged = graft.Meta.Versioned.read(spark, path)
           .unionByName(bt)
           .orderBy(col("priority").desc, col("doc_id")).limit(n + 1)
         graft.Meta.Versioned.writeOnce(merged, path, "q267", bid)
-        ()
-      }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(feedDf.filter(col("doc_id") % 6 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(feedDf.filter(col("doc_id") % 6 === 3))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       Sample.priorityFinish(graft.Meta.Versioned.read(spark, path),
           "doc_id", "n_chars", n)
@@ -1438,11 +1275,9 @@ object StatefulQueries {
       import spark.implicits._
       graft.Meta.Versioned.write(
         Seq.empty[(Long, Long, Long)].toDF("bid", "n", "k"), path)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() of the corpus text. Batch membership unchanged:
-      // batch b = doc_id ≡ b (mod 4), exactly the oracle's blog CTE.
-      val feed = new graft.streaming.Streams.FileFeed(spark, docs.schema, root)
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      // batch b = doc_id ≡ b (mod 4), exactly the oracle's blog CTE
+      val batches = (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b))
+      graft.streaming.Streams.foldFeed(root, batches) { (batch, bid) =>
         val agg = batch.toDF("doc_id", "text")
           .select(col("doc_id"),
             Text.gopherSignals(col("text")).last.cast("int").cast("long")
@@ -1452,22 +1287,6 @@ object StatefulQueries {
         // segment-append fold (round 21): one (bid, n, k) row per batch
         // is append-only — writeOnce the delta, resolve with readAll
         graft.Meta.Versioned.writeOnce(agg, path, "q270", bid)
-        ()
-      }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(docs.filter(col("doc_id") % 4 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          (1L until 4L).foreach { b =>
-            feed.add(docs.filter(col("doc_id") % 4 === b))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
       }
       // unpartitioned window over the |batches|-row version manifest only
       val w = Window.orderBy("bid")
@@ -1516,34 +1335,18 @@ object StatefulQueries {
           size(graft.ops.Text.tokens(col("text"))).cast("long").as("ntok"))
       graft.Meta.Versioned.write(Packing.emptyState(spark), stPath)
       val cutoff = Streams.halfCutoffByKey(t, "doc_id")
-      val feed = new Streams.FileFeed(spark, t.schema, root)
-      @volatile var lastBid = -1L
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
-        if (bid > lastBid) lastBid = bid
+      val batches = Seq(t.filter(col("doc_id") <= cutoff),
+        t.filter(col("doc_id") > cutoff))
+      def fold(batch: org.apache.spark.sql.DataFrame, bid: Long): Unit = {
         val standing = graft.Meta.Versioned.read(spark, stPath)
         graft.Meta.Versioned.writeOnce(
           Packing.packFold(standing,
             batch.toDF("source", "doc_id", "ntok"), 512L),
           stPath, "q307state", bid)
-        ()
-      }
-      Streams.withShufflePartitions(spark, 4) {
-        feed.add(t.filter(col("doc_id") <= cutoff))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          feed.add(t.filter(col("doc_id") > cutoff))
-          q.processAllAvailable()
-        } finally q.stop()
       }
       // at-least-once replay of the final batch: the max_id guard folds
       // it to a no-op AND the txn marker skips the write
-      fold(t.filter(col("doc_id") > cutoff).toDF("source", "doc_id", "ntok"),
-        lastBid)
+      fold(batches.last, Streams.foldFeed(root, batches)(fold))
       Packing.economics(graft.Meta.Versioned.read(spark, stPath), 512L)
     })
 

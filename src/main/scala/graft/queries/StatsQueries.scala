@@ -719,34 +719,15 @@ object StatsQueries {
       import spark.implicits._
       graft.Meta.Versioned.write(
         Seq.empty[(Long, Long, Long)].toDF("bin", "n", "pos"), path)
-      // file-backed feed (Streams.FileFeed, round 16): no driver
-      // collect() in the measured path — the whole corpus used to
-      // round-trip through the driver as tuples. Batch membership
-      // unchanged: batch b = doc_id ≡ b (mod 4).
-      val feed = new graft.streaming.Streams.FileFeed(spark, docs.schema, root)
+      // batch b = doc_id ≡ b (mod 4).
       // Segment-append fold (round 21): per-bin (n, pos) counts are
       // additive long sums — writeOnce the batch's partial only,
       // re-reduce the retained segments at read. Same txn markers.
-      val fold = (batch: org.apache.spark.sql.DataFrame, bid: Long) => {
+      val batches = (0L until 4L).map(b => docs.filter(col("doc_id") % 4 === b))
+      graft.streaming.Streams.foldFeed(root, batches) { (batch, bid) =>
         graft.Meta.Versioned.writeOnce(
           lengthBinnedGate(batch.toDF("doc_id", "n_chars", "text")),
           path, "q272", bid)
-        ()
-      }
-      graft.streaming.Streams.withShufflePartitions(spark, 4) {
-        feed.add(docs.filter(col("doc_id") % 4 === 0))
-        val q = feed.stream.writeStream
-          .foreachBatch(fold)
-          .outputMode("update")
-          .option("checkpointLocation", s"$root/cp")
-          .start()
-        try {
-          q.processAllAvailable()
-          (1L until 4L).foreach { b =>
-            feed.add(docs.filter(col("doc_id") % 4 === b))
-            q.processAllAvailable()
-          }
-        } finally q.stop()
       }
       Stats.isotonicFit(
         graft.Meta.Versioned.readAll(spark, path)

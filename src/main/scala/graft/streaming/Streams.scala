@@ -25,6 +25,11 @@ import org.apache.spark.sql.types.StructType
   * both embarrassingly parallel. Checkpointing gives exactly-once into
   * file sinks; the DLQ fork follows the reference in running the
   * source+parse once per started query.
+  *
+  * Folds — a stream whose `foreachBatch` body upserts a standing table
+  * (util/verify_spark.py:108-114) — are driven one way: [[foldFeed]]
+  * stages the batches through a [[FileFeed]] and runs one query over
+  * them, one add per micro-batch.
   */
 object Streams {
 
@@ -92,6 +97,39 @@ object Streams {
         java.nio.file.Paths.get(s"$dir/b$id"),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
+  }
+
+  /** Drive a fold over `batches`, one micro-batch each: a [[FileFeed]]
+    * under `root` with `batches.head` staged before the start, then one
+    * `foreachBatch(fold)` query (checkpoint `cp` under `root`, default
+    * trigger) at 4 shuffle partitions — the per-batch state is small,
+    * and the width is frozen into the checkpoint at first start. Each later
+    * batch is one `add` followed by `processAllAvailable()`, so add i is
+    * micro-batch i; a repeated element is a redelivered batch. The
+    * query stops in a `finally`. Returns the highest batch id the fold
+    * saw — the id a caller replays `batches.last` under to exercise its
+    * at-least-once shield. */
+  def foldFeed(root: String, batches: Seq[DataFrame])(
+      fold: (DataFrame, Long) => Unit): Long = {
+    val spark = batches.head.sparkSession
+    val feed = new FileFeed(spark, batches.head.schema, root)
+    @volatile var lastBid = -1L
+    graft.Sessions.withShufflePartitions(spark, 4) {
+      feed.add(batches.head)
+      val q = feed.stream.writeStream
+        .foreachBatch { (batch: DataFrame, bid: Long) =>
+          if (bid > lastBid) lastBid = bid
+          fold(batch, bid)
+        }
+        .outputMode("update")
+        .option("checkpointLocation", s"$root/cp")
+        .start()
+      try {
+        q.processAllAvailable()
+        batches.tail.foreach { b => feed.add(b); q.processAllAvailable() }
+      } finally q.stop()
+    }
+    lastBid
   }
 
   /** Harness-side batch-staging cutoff for FileFeed consumers: the
@@ -249,14 +287,4 @@ object Streams {
   /** T6: block until any active query terminates (kafka_DLQ.py:93). */
   def awaitAnyTermination(spark: SparkSession, timeoutMs: Long): Boolean =
     spark.streams.awaitAnyTermination(timeoutMs)
-
-  /** Stateful streaming ops instantiate one state store (with its own
-    * checkpoint delta files) PER shuffle partition PER micro-batch — a
-    * low-rate stream with the batch-tuned width pays 32 state commits
-    * per trigger for a handful of rows. The width is frozen into the
-    * checkpoint at first start, so it must be set before the query
-    * begins; size it to state volume, not CPU count. Delegates to the
-    * shared [[graft.Sessions.withShufflePartitions]]. */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    graft.Sessions.withShufflePartitions(spark, n)(body)
 }

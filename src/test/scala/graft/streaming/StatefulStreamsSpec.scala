@@ -52,7 +52,7 @@ class StatefulStreamsSpec extends SparkSuite {
       java.nio.file.Files.write(in.resolve(name),
         String.join("\n", lines: _*).getBytes)
     def runOnce(sinkName: String) =
-      Streams.withShufflePartitions(spark, 4) {
+      graft.Sessions.withShufflePartitions(spark, 4) {
         val q = spark.readStream
           .schema(org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("k",
@@ -97,7 +97,7 @@ class StatefulStreamsSpec extends SparkSuite {
     def runOnce(): Set[(Long, Long, Long)] = {
       val got = scala.collection.mutable.Set.empty[(Long, Long, Long)]
       StateV2.withRocksDbState(spark) {
-        Streams.withShufflePartitions(spark, 4) {
+        graft.Sessions.withShufflePartitions(spark, 4) {
           val src = spark.readStream.schema(schema).json(in.toString)
             .as[StateV2.EventIn]
           val q = StateV2.runningUserStats(src)
@@ -154,7 +154,7 @@ class StatefulStreamsSpec extends SparkSuite {
     graft.Meta.Versioned.write(
       sketchOf(spark.range(0).selectExpr("id AS v").filter(lit(false))), skPath)
     def runOnce(): Unit =
-      Streams.withShufflePartitions(spark, 4) {
+      graft.Sessions.withShufflePartitions(spark, 4) {
         val q = spark.readStream.schema(schema).json(in.toString)
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -228,7 +228,7 @@ class StatefulStreamsSpec extends SparkSuite {
         aggPath, "moments", bid)
       ()
     }
-    Streams.withShufflePartitions(spark, 4) {
+    graft.Sessions.withShufflePartitions(spark, 4) {
       val q = src.writeStream
         .foreachBatch(fold)
         .outputMode("update")

@@ -325,24 +325,46 @@ class StreamsSpec extends SparkSuite {
   test("FileFeed: executor-side staging reproduces MemoryStream batch boundaries") {
     val root = tmp("filefeed")
     val src = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "v")
-    val feed = new Streams.FileFeed(spark, src.schema, root.toString)
     val seen = scala.collection.mutable.Map[Long, Set[Long]]()
-    feed.add(src.filter(col("id") % 2 === 0))
-    val q = feed.stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, bid: Long) =>
-        seen(bid) = batch.select("id").as[Long].collect().toSet; ()
-      }
-      .option("checkpointLocation", root.resolve("cp").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      feed.add(src.filter(col("id") % 2 === 1))
-      q.processAllAvailable()
-    } finally q.stop()
+    val lastBid = Streams.foldFeed(root.toString,
+        Seq(src.filter(col("id") % 2 === 0), src.filter(col("id") % 2 === 1))) {
+        (batch, bid) => seen(bid) = batch.select("id").as[Long].collect().toSet
+    }
     // one add + one drain = one batch, exact membership, nothing dropped
     assert(seen(0L) == Set(2L, 4L))
     assert(seen(1L) == Set(1L, 3L))
     assert(seen.keySet == Set(0L, 1L))
+    assert(lastBid == 1L)
+  }
+
+  test("foldFeed: a throwing fold or a failing add fails the call and " +
+      "leaves no query running") {
+    val src = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    def failsWith(msg: String)(body: => Unit): Unit = {
+      val err = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => Option(e.getMessage).exists(_.contains(msg))),
+        s"unexpected failure: $err")
+      assert(spark.streams.active.isEmpty, "the finally stop() must end the query")
+      spark.streams.resetTerminated()
+    }
+    // the fold throws on micro-batch 1: the query dies, processAllAvailable rethrows
+    failsWith("fold failed") {
+      Streams.foldFeed(tmp("foldfeed-throw").toString,
+          Seq(src.filter(col("id") === 1), src.filter(col("id") === 2))) {
+          (_, bid) => if (bid == 1L) throw new IllegalStateException("fold failed")
+      }
+    }
+    // staging batch 1 throws on the driver while the query is still live:
+    // only the finally stops it
+    failsWith("add failed") {
+      Streams.foldFeed(tmp("foldfeed-add").toString,
+          Seq(src.filter(col("id") === 1),
+            src.filter(col("id") === 2).select(col("id"),
+              raise_error(lit("add failed")).cast("string").as("v")))) {
+          (_, _) => ()
+      }
+    }
   }
 
   test("FileFeed: restart from checkpoint resumes without replaying committed batches") {
