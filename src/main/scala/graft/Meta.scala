@@ -522,14 +522,7 @@ object Meta {
       id.map { c =>
         val (f, _) = fs(spark, root)
         val in = f.open(new org.apache.hadoop.fs.Path(s"$root/_commit=$c"))
-        val bytes =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](8192)
-            var n = in.read(chunk)
-            while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-            buf.toByteArray
-          } finally in.close()
+        val bytes = try in.readAllBytes() finally in.close()
         new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
           .split("\n").toSeq.filter(_.nonEmpty)
           .map { line =>

@@ -1,149 +1,97 @@
 package graft
 
 import graft.functions._
+import graft.plans.AsOfMarker
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import scala.reflect.ClassTag
 
 /** Session construction: one place for the engine's config + the custom
   * expression registrations (SparkSessionExtensions.injectFunction — the
   * public extension point; the expressions live in graft.functions).
+  *
+  * [[functionTable]] is the one place to add a `graft_*` SQL function:
+  * one `fn[Expr](name) { case ... }` entry, one `case` per accepted
+  * argument list.
   */
 object Sessions {
 
-  private def intArg(e: Expression, fn: String): Int = e match {
+  /** One SQL function: its name, the expression class it builds (named
+    * once, as `fn`'s type parameter) and its accepted argument lists. */
+  private final case class Fn(name: String, clazz: Class[_],
+      build: PartialFunction[Seq[Expression], Expression])
+
+  private def fn[E <: Expression](name: String)(
+      build: PartialFunction[Seq[Expression], E])(implicit c: ClassTag[E]): Fn =
+    Fn(name, c.runtimeClass, build)
+
+  private def int(e: Expression): Int = e match {
     case Literal(v: Int, _) => v
-    case other =>
-      throw new IllegalArgumentException(s"$fn expects a literal int, got $other")
+    case other => throw new IllegalArgumentException(s"expects a literal int, got $other")
   }
 
-  /** Registers the graft_* functions (see graft.functions.TextKernels)
-    * and the kernel-fusion optimizer rule (graft.plans.KernelFusion). */
+  private val functionTable: Seq[Fn] = Seq(
+    fn[ShingleHashes]("graft_shingle_hashes") { case Seq(t, n) => ShingleHashes(t, int(n)) },
+    fn[WindowHashes]("graft_window_hashes") { case Seq(t, n) => WindowHashes(t, int(n)) },
+    fn[TokenHashes]("graft_token_hashes") { case Seq(t) => TokenHashes(t) },
+    fn[MinHashSignature]("graft_minhash_signature") { case Seq(h, k) => MinHashSignature(h, int(k)) },
+    fn[SimHash]("graft_simhash") { case Seq(h, b) => SimHash(h, int(b)) },
+    fn[SortedIntersectSize]("graft_sorted_intersect_size") { case Seq(a, b) => SortedIntersectSize(a, b) },
+    fn[DotProduct]("graft_dot_product") { case Seq(a, b) => DotProduct(a, b) },
+    fn[HllDistinct]("graft_hll_distinct") {
+      case Seq(x) => HllDistinct(x, 12); case Seq(x, p) => HllDistinct(x, int(p)) },
+    fn[HllSketch]("graft_hll_sketch") {
+      case Seq(x) => HllSketch(x, 12); case Seq(x, p) => HllSketch(x, int(p)) },
+    fn[HllMergeAgg]("graft_hll_merge") { case Seq(s) => HllMergeAgg(s) },
+    fn[HllEstimate]("graft_hll_estimate") { case Seq(s) => HllEstimate(s) },
+    fn[KmvSketch]("graft_kmv_sketch") {
+      case Seq(x) => KmvSketch(x, 1024); case Seq(x, k) => KmvSketch(x, int(k)) },
+    fn[KmvMergeAgg]("graft_kmv_merge") { case Seq(s) => KmvMergeAgg(s) },
+    fn[KmvEstimate]("graft_kmv_estimate") { case Seq(s) => KmvEstimate(s) },
+    fn[KmvJaccard]("graft_kmv_jaccard") { case Seq(a, b) => KmvJaccard(a, b) },
+    fn[KllSketchAgg]("graft_kll_sketch") {
+      case Seq(x) => KllSketchAgg(x, 256); case Seq(x, k) => KllSketchAgg(x, int(k)) },
+    fn[KllMergeAgg]("graft_kll_merge") { case Seq(s) => KllMergeAgg(s) },
+    fn[KllQuantile]("graft_kll_quantile") { case Seq(s, q) => KllQuantile(s, q) },
+    fn[BloomContains]("graft_bloom_contains") { case Seq(b, h) => BloomContains(b, h) },
+    fn[CmSketch]("graft_cm_sketch") {
+      case Seq(x) => CmSketch(x, 2048, 4); case Seq(x, w) => CmSketch(x, int(w), 4)
+      case Seq(x, w, d) => CmSketch(x, int(w), int(d)) },
+    fn[CmMergeAgg]("graft_cm_merge") { case Seq(s) => CmMergeAgg(s) },
+    fn[CmEstimate]("graft_cm_estimate") { case Seq(s, x) => CmEstimate(s, x) },
+    fn[CmJoinSize]("graft_cm_join_size") { case Seq(a, b) => CmJoinSize(a, b) },
+    fn[CmTotal]("graft_cm_total") { case Seq(s) => CmTotal(s) },
+    fn[FreqSketch]("graft_freq_sketch") { case Seq(x, c) => FreqSketch(x, int(c)) },
+    fn[TopKRows]("graft_topk") { case Seq(key, p, k) => TopKRows(key, p, int(k)) },
+    fn[LshBuckets]("graft_lsh_buckets") { case Seq(v, b, d, t) => LshBuckets(v, int(b), int(d), int(t)) },
+    fn[CdcBoundaries]("graft_cdc_boundaries") { case Seq(t, w, d) => CdcBoundaries(t, int(w), int(d)) },
+    fn[AHash64]("graft_ahash") { case Seq(t) => AHash64(t) },
+    fn[AsOfMarker]("graft_asof") { case Seq(l, r, tie) => AsOfMarker(l, r, tie) },
+    fn[BitmapSketch]("graft_bitmap_sketch") { case Seq(x) => BitmapSketch(x) },
+    fn[BitmapMergeAgg]("graft_bitmap_merge") { case Seq(s) => BitmapMergeAgg(s) },
+    fn[BitmapCount]("graft_bitmap_count") { case Seq(s) => BitmapCount(s) },
+    fn[NormText]("graft_norm_text") { case Seq(t) => NormText(t) },
+    fn[PairProducts]("graft_pair_products") { case Seq(v) => PairProducts(v) },
+    fn[CharCounts]("graft_char_counts") { case Seq(t) => CharCounts(t) },
+    fn[RollingHash]("graft_rolling_hash") { case Seq(t) => RollingHash(t) })
+
+  /** Registers [[functionTable]] (see graft.functions.TextKernels) and
+    * the kernel-fusion optimizer rule (graft.plans.KernelFusion). An
+    * argument list no `case` accepts, or a non-literal int argument,
+    * throws IllegalArgumentException naming the function. */
   val registerGraftFunctions: SparkSessionExtensions => Unit = { ext =>
     ext.injectOptimizerRule(graft.plans.KernelFusion.apply)
     ext.injectResolutionRule(_ => graft.plans.AsOfRewrite)
     ext.injectPlannerStrategy(graft.plans.AsOfJoinStrategy.apply)
-    def info(name: String, clazz: Class[_]) = new ExpressionInfo(clazz.getName, name)
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", classOf[ShingleHashes]),
-      (e: Seq[Expression]) => ShingleHashes(e.head, intArg(e(1), "graft_shingle_hashes"))))
-    ext.injectFunction((FunctionIdentifier("graft_window_hashes"),
-      info("graft_window_hashes", classOf[WindowHashes]),
-      (e: Seq[Expression]) => WindowHashes(e.head, intArg(e(1), "graft_window_hashes"))))
-    ext.injectFunction((FunctionIdentifier("graft_token_hashes"),
-      info("graft_token_hashes", classOf[TokenHashes]),
-      (e: Seq[Expression]) => TokenHashes(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_signature"),
-      info("graft_minhash_signature", classOf[MinHashSignature]),
-      (e: Seq[Expression]) => MinHashSignature(e.head, intArg(e(1), "graft_minhash_signature"))))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      info("graft_simhash", classOf[SimHash]),
-      (e: Seq[Expression]) => SimHash(e.head, intArg(e(1), "graft_simhash"))))
-    ext.injectFunction((FunctionIdentifier("graft_sorted_intersect_size"),
-      info("graft_sorted_intersect_size", classOf[SortedIntersectSize]),
-      (e: Seq[Expression]) => SortedIntersectSize(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_dot_product"),
-      info("graft_dot_product", classOf[DotProduct]),
-      (e: Seq[Expression]) => DotProduct(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_hll_distinct"),
-      info("graft_hll_distinct", classOf[HllDistinct]),
-      (e: Seq[Expression]) => HllDistinct(e.head,
-        if (e.length > 1) intArg(e(1), "graft_hll_distinct") else 12)))
-    ext.injectFunction((FunctionIdentifier("graft_hll_sketch"),
-      info("graft_hll_sketch", classOf[HllSketch]),
-      (e: Seq[Expression]) => HllSketch(e.head,
-        if (e.length > 1) intArg(e(1), "graft_hll_sketch") else 12)))
-    ext.injectFunction((FunctionIdentifier("graft_hll_merge"),
-      info("graft_hll_merge", classOf[HllMergeAgg]),
-      (e: Seq[Expression]) => HllMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_hll_estimate"),
-      info("graft_hll_estimate", classOf[HllEstimate]),
-      (e: Seq[Expression]) => HllEstimate(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_sketch"),
-      info("graft_kmv_sketch", classOf[KmvSketch]),
-      (e: Seq[Expression]) => KmvSketch(e.head,
-        if (e.length > 1) intArg(e(1), "graft_kmv_sketch") else 1024)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_merge"),
-      info("graft_kmv_merge", classOf[KmvMergeAgg]),
-      (e: Seq[Expression]) => KmvMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_estimate"),
-      info("graft_kmv_estimate", classOf[KmvEstimate]),
-      (e: Seq[Expression]) => KmvEstimate(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_jaccard"),
-      info("graft_kmv_jaccard", classOf[KmvJaccard]),
-      (e: Seq[Expression]) => KmvJaccard(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_kll_sketch"),
-      info("graft_kll_sketch", classOf[KllSketchAgg]),
-      (e: Seq[Expression]) => KllSketchAgg(e.head,
-        if (e.length > 1) intArg(e(1), "graft_kll_sketch") else 256)))
-    ext.injectFunction((FunctionIdentifier("graft_kll_merge"),
-      info("graft_kll_merge", classOf[KllMergeAgg]),
-      (e: Seq[Expression]) => KllMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kll_quantile"),
-      info("graft_kll_quantile", classOf[KllQuantile]),
-      (e: Seq[Expression]) => KllQuantile(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_contains"),
-      info("graft_bloom_contains", classOf[BloomContains]),
-      (e: Seq[Expression]) => BloomContains(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cm_sketch"),
-      info("graft_cm_sketch", classOf[CmSketch]),
-      (e: Seq[Expression]) => CmSketch(e.head,
-        if (e.length > 1) intArg(e(1), "graft_cm_sketch") else 2048,
-        if (e.length > 2) intArg(e(2), "graft_cm_sketch") else 4)))
-    ext.injectFunction((FunctionIdentifier("graft_cm_merge"),
-      info("graft_cm_merge", classOf[CmMergeAgg]),
-      (e: Seq[Expression]) => CmMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_cm_estimate"),
-      info("graft_cm_estimate", classOf[CmEstimate]),
-      (e: Seq[Expression]) => CmEstimate(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cm_join_size"),
-      info("graft_cm_join_size", classOf[CmJoinSize]),
-      (e: Seq[Expression]) => CmJoinSize(e.head, e(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cm_total"),
-      info("graft_cm_total", classOf[CmTotal]),
-      (e: Seq[Expression]) => CmTotal(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_freq_sketch"),
-      info("graft_freq_sketch", classOf[FreqSketch]),
-      (e: Seq[Expression]) => FreqSketch(e.head, intArg(e(1), "graft_freq_sketch"))))
-    ext.injectFunction((FunctionIdentifier("graft_topk"),
-      info("graft_topk", classOf[TopKRows]),
-      (e: Seq[Expression]) => TopKRows(e.head, e(1), intArg(e(2), "graft_topk"))))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_buckets"),
-      info("graft_lsh_buckets", classOf[LshBuckets]),
-      (e: Seq[Expression]) => LshBuckets(e.head,
-        intArg(e(1), "graft_lsh_buckets"), intArg(e(2), "graft_lsh_buckets"),
-        intArg(e(3), "graft_lsh_buckets"))))
-    ext.injectFunction((FunctionIdentifier("graft_cdc_boundaries"),
-      info("graft_cdc_boundaries", classOf[CdcBoundaries]),
-      (e: Seq[Expression]) => CdcBoundaries(e.head,
-        intArg(e(1), "graft_cdc_boundaries"), intArg(e(2), "graft_cdc_boundaries"))))
-    ext.injectFunction((FunctionIdentifier("graft_ahash"),
-      info("graft_ahash", classOf[AHash64]),
-      (e: Seq[Expression]) => AHash64(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_asof"),
-      info("graft_asof", classOf[graft.plans.AsOfMarker]),
-      (e: Seq[Expression]) => graft.plans.AsOfMarker(e.head, e(1), e(2))))
-    ext.injectFunction((FunctionIdentifier("graft_bitmap_sketch"),
-      info("graft_bitmap_sketch", classOf[BitmapSketch]),
-      (e: Seq[Expression]) => BitmapSketch(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_bitmap_merge"),
-      info("graft_bitmap_merge", classOf[BitmapMergeAgg]),
-      (e: Seq[Expression]) => BitmapMergeAgg(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_bitmap_count"),
-      info("graft_bitmap_count", classOf[BitmapCount]),
-      (e: Seq[Expression]) => BitmapCount(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_norm_text"),
-      info("graft_norm_text", classOf[NormText]),
-      (e: Seq[Expression]) => NormText(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_pair_products"),
-      info("graft_pair_products", classOf[PairProducts]),
-      (e: Seq[Expression]) => PairProducts(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_char_counts"),
-      info("graft_char_counts", classOf[CharCounts]),
-      (e: Seq[Expression]) => CharCounts(e.head)))
-    ext.injectFunction((FunctionIdentifier("graft_rolling_hash"),
-      info("graft_rolling_hash", classOf[RollingHash]),
-      (e: Seq[Expression]) => RollingHash(e.head)))
+    for (Fn(name, clazz, build) <- functionTable)
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name),
+        (args: Seq[Expression]) =>
+          (try build.lift(args) catch {
+            case e: IllegalArgumentException =>
+              throw new IllegalArgumentException(s"$name ${e.getMessage}", e)
+          }).getOrElse(throw new IllegalArgumentException(
+            s"$name accepts no call with ${args.length} arguments"))))
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` = n, restoring the

@@ -7,8 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
 
   /** Every registered operator query (one per SURVEY.md §2 inventory row /
-    * LLM-pipeline operator), each with a DuckDB oracle where the semantics
-    * are ANSI-SQL-expressible. */
+    * LLM-pipeline operator), each with a DuckDB oracle. */
   def registry: Seq[Q] =
     HrQueries.all ++ PipelineQueries.all ++ LlmQueries.all ++
       StatefulQueries.all ++ TemporalQueries.all ++ AnalyticsQueries.all ++
@@ -25,7 +24,7 @@ object SparkEntry {
     registry.map(q => q.name -> q.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    registry.map(q => q.name -> q.oracle).toMap
 }

@@ -4,19 +4,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 package object queries {
 
-  /** One registered operator query: Spark implementation + (optionally) an
+  /** One registered operator query: Spark implementation + an
     * equivalent ANSI SQL string the DuckDB oracle can run over the same
     * parquet tables. Column names/aliases MUST match between the two
     * (driver compares after sorting columns by name). */
   final case class Q(
       name: String,
       fn: (SparkSession, String) => DataFrame,
-      oracle: Option[String])
+      oracle: String)
 
   object Q {
     def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
-      Q(name, fn, Some(oracle))
-    def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-      Q(name, fn, None)
+      new Q(name, fn, oracle)
   }
 }

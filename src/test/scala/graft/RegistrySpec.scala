@@ -31,6 +31,13 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("query names are distinct, so no query drops out of the name maps") {
+    val dups = SparkEntry.registry.map(_.name).groupBy(identity).collect {
+      case (n, ns) if ns.size > 1 => n
+    }
+    assert(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted}")
+  }
+
   test("no orphan oracles or pins for unregistered queries") {
     val orphans = (SparkEntry.oracleSql.keySet ++ specPinned.keySet) --
       SparkEntry.queries.keySet
